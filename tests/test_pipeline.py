@@ -127,33 +127,40 @@ def test_scrub_dropped_config(spark):
         assert r["scrubbed"] is not None
 
 
-def test_fused_equals_modular(spark):
-    """The fused single-crossing stage and the modular operators must
-    produce identical results — both wrap the same kernel."""
+def test_pipeline_equals_scalar_reference(spark):
+    """The batched stage must equal the scalar kernel reference clip by
+    clip: langid and perplexity on ONE text, the scalar keep/drop, and
+    filter_text under the pipeline's scrub config (URL filter included),
+    mapping and all."""
+    from top_secret_spark.kernel.filters import NORTH_STAR_CONFIG
+
     clips = clips_df(spark, 150, with_audio=False)
-    a = run_pipeline(clips, PipelineConfig(fused=True)).orderBy("clip_id").collect()
-    b = run_pipeline(clips, PipelineConfig(fused=False)).orderBy("clip_id").collect()
-    for ra, rb in zip(a, b):
-        assert ra["keep"] == rb["keep"] and ra["drop_reason"] == rb["drop_reason"]
-        assert ra["scrubbed"] == rb["scrubbed"] and ra["mapping"] == rb["mapping"]
-        assert abs(ra["ppl"] - rb["ppl"]) < 1e-9
-        assert ra["n_chars"] == rb["n_chars"] and ra["n_words"] == rb["n_words"]
+    rows = run_pipeline(clips).orderBy("clip_id").collect()
+    assert len(rows) == 150
+    for r in rows:
+        text = r["transcript"]
+        langs, confs = detect_batch([text])
+        ppl = float(perplexity_batch([text])[0])
+        keep, reason = keep_drop(text, langs[0], float(confs[0]), ppl)
+        assert (r["lang"], r["lang_conf"]) == (langs[0], float(confs[0]))
+        assert abs(r["ppl"] - ppl) < 1e-9, r["clip_id"]
+        assert (r["keep"], r["drop_reason"]) == (keep, reason), r["clip_id"]
+        scrubbed, mapping = (
+            filter_text(text, None, NORTH_STAR_CONFIG) if keep else (None, None)
+        )
+        assert r["scrubbed"] == scrubbed, r["clip_id"]
+        got = (None if r["mapping"] is None
+               else [(e["key"], e["value"]) for e in r["mapping"]])
+        assert got == mapping, r["clip_id"]
 
 
-def test_partition_audit_and_counters(spark):
-    from top_secret_spark.operators.fused import run_pipeline_fused
-    from top_secret_spark.pipeline import PipelineCounters, partition_audit
+def test_partition_audit(spark):
+    from top_secret_spark.pipeline import partition_audit
 
     clips = clips_df(spark, 200, with_audio=False, partitions=4)
-    counters = PipelineCounters(spark)
-    out = run_pipeline_fused(clips, counters=counters)
-    audit = partition_audit(out).collect()
+    audit = partition_audit(run_pipeline(clips)).collect()
     assert sum(r["n"] for r in audit) == 200
     assert {r["partition_id"] for r in audit} == {0, 1, 2, 3}
-    c = counters.as_dict()
-    assert c["rows_in"] == 200
-    assert 0 < c["rows_kept"] < 200
-    assert c["rows_scrubbed"] == c["rows_kept"]
 
 
 def test_salting_spreads_hot_key(spark):
@@ -216,9 +223,8 @@ def test_per_codec_top_k_salted_equals_plain_window(spark):
 
 def test_pipeline_with_injected_entities(spark):
     """NER-entities slot at the pipeline level: injected entities column
-    drives the NER filters (fused AND modular paths agree)."""
-    from pyspark.sql import functions as F
-
+    drives the NER filters, with and without the audio decode in the
+    same stage."""
     rows = [
         ("a", None, 0, 0, "pcm16",
          "Ralph met the committee in Boston to review the annual budget today.",
@@ -231,9 +237,10 @@ def test_pipeline_with_injected_entities(spark):
               "codec string, transcript string, "
               "entities array<struct<text:string,tag:string,score:double>>")
     df = spark.createDataFrame(rows, schema)
-    for fused in (True, False):
+    for include_audio in (False, True):
         out = {r["clip_id"]: r for r in run_pipeline(
-            df, PipelineConfig(entities_col="entities", fused=fused)
+            df, PipelineConfig(entities_col="entities",
+                               include_audio=include_audio)
         ).collect()}
         assert out["a"]["keep"]
         assert out["a"]["scrubbed"] == (
@@ -285,7 +292,7 @@ def test_keep_drop_vector_matches_scalar_grid():
 def test_pipeline_with_audio_gate(spark):
     """Multimodal keep/drop: with ``audio_gate`` set, keep requires both
     gates and the audio reason wins the drop_reason slot — checked
-    against a text-only twin run on both the fused and modular paths."""
+    against a text-only twin run."""
     from top_secret_spark.operators.audio import AudioGateThresholds
     from top_secret_spark.pipeline import PipelineConfig, run_pipeline
     from top_secret_spark.sources.clips import gate_clips_df
@@ -293,22 +300,31 @@ def test_pipeline_with_audio_gate(spark):
     clips = gate_clips_df(spark, 24, partitions=2)
     planted = {0: "silent", 1: "clipped", 2: "too_short_audio",
                3: "decode_error"}
-    for fused in (True, False):
-        cfg = PipelineConfig(include_audio=True, fused=fused,
-                             audio_gate=AudioGateThresholds())
-        text_cfg = PipelineConfig(include_audio=True, fused=fused)
-        out = {r["clip_id"]: r for r in run_pipeline(clips, cfg).collect()}
-        text = {r["clip_id"]: r for r in run_pipeline(clips, text_cfg).collect()}
-        assert len(out) == 24
-        for cid, row in out.items():
-            t = text[cid]
-            r_idx = int(cid.split("-")[1])
-            audio_reason = planted.get(r_idx % 6)
-            assert row["keep"] == (t["keep"] and audio_reason is None), (fused, cid)
-            exp_reason = audio_reason if audio_reason is not None else t["drop_reason"]
-            assert row["drop_reason"] == exp_reason, (fused, cid)
-            # text columns are untouched by the fold
-            assert row["scrubbed"] == t["scrubbed"], (fused, cid)
+    cfg = PipelineConfig(include_audio=True, audio_gate=AudioGateThresholds())
+    text_cfg = PipelineConfig(include_audio=True)
+    out = {r["clip_id"]: r for r in run_pipeline(clips, cfg).collect()}
+    text = {r["clip_id"]: r for r in run_pipeline(clips, text_cfg).collect()}
+    assert len(out) == 24
+    for cid, row in out.items():
+        t = text[cid]
+        r_idx = int(cid.split("-")[1])
+        audio_reason = planted.get(r_idx % 6)
+        assert row["audio_drop_reason"] == audio_reason, cid
+        assert row["keep"] == (t["keep"] and audio_reason is None), cid
+        exp_reason = audio_reason if audio_reason is not None else t["drop_reason"]
+        assert row["drop_reason"] == exp_reason, cid
+        # text columns are untouched by the fold
+        assert row["scrubbed"] == t["scrubbed"], cid
+
+
+def test_audio_gate_without_audio_raises():
+    """A gate over audio features that are never computed is a dead
+    config: it must fail at construction, not be silently ignored."""
+    from top_secret_spark.operators.audio import AudioGateThresholds
+
+    with pytest.raises(ValueError, match="include_audio"):
+        PipelineConfig(audio_gate=AudioGateThresholds())
+    PipelineConfig(include_audio=True, audio_gate=AudioGateThresholds())
 
 
 def test_quality_rule_audit_cofiring_and_column_gating(spark):
@@ -346,52 +362,70 @@ def test_quality_rule_audit_cofiring_and_column_gating(spark):
 
 
 def test_multimodal_fused_single_crossing_equivalence(spark):
-    """include_audio + fused must take the one-Arrow-crossing stage and
-    produce row-for-row identical output (by column NAME — the stage
-    emits fused fields after the audio features) to the legacy
-    two-crossing layout (decode mapInPandas + text pandas_udf),
-    including the folded audio gate."""
-    from top_secret_spark.operators.audio import AudioGateThresholds
-    from top_secret_spark.operators.fused import run_pipeline_fused
-    from top_secret_spark.operators.audio import with_audio_features
+    """include_audio runs decode + audio features + the text kernel in
+    one stage; its output must equal the same batch cores
+    (append_audio_feature_columns, fused_text_frame) run in the driver
+    over the collected input, column for column and in column order."""
+    from top_secret_spark.kernel.filters import NORTH_STAR_CONFIG
+    from top_secret_spark.kernel.quality import DEFAULT_THRESHOLDS
+    from top_secret_spark.operators.audio import append_audio_feature_columns
+    from top_secret_spark.operators.fused import FUSED_FIELDS, fused_text_frame
 
     clips = clips_df(spark, 150, with_audio=True)
-    gate = AudioGateThresholds()
-    cfg = PipelineConfig(include_audio=True, audio_gate=gate)
-    one = run_pipeline(clips, cfg).orderBy("clip_id").collect()
+    got = run_pipeline(clips, PipelineConfig(include_audio=True))
+    got = got.orderBy("clip_id").collect()
 
-    # legacy two-crossing path, assembled explicitly
-    from top_secret_spark.pipeline import _fold_audio_gate
-    from top_secret_spark.operators.audio import audio_drop_reason_col
-    df = with_audio_features(clips)
-    reason = audio_drop_reason_col(gate)
-    df = df.withColumn("audio_drop_reason", reason).withColumn(
-        "audio_keep", reason.isNull()
+    exp = append_audio_feature_columns(
+        clips.toPandas().sort_values("clip_id", ignore_index=True)
     )
-    two = _fold_audio_gate(run_pipeline_fused(df)).orderBy("clip_id").collect()
+    text = fused_text_frame(
+        exp["transcript"], None, NORTH_STAR_CONFIG, DEFAULT_THRESHOLDS, False
+    )
+    for name in FUSED_FIELDS:
+        exp[name] = text[name].values
 
-    assert len(one) == len(two) > 0
-    cols = sorted(one[0].asDict())
-    assert cols == sorted(two[0].asDict())
-    for a, b in zip(one, two):
-        da, db = a.asDict(), b.asDict()
-        for c in cols:
-            assert da[c] == db[c], (da["clip_id"], c, da[c], db[c])
+    assert len(got) == len(exp) > 0
+    assert list(got[0].asDict()) == list(exp.columns)
+    for row, (_, e) in zip(got, exp.iterrows()):
+        for c in exp.columns:
+            g, want = row[c], e[c]
+            if c == "mapping" and g is not None:
+                g = [m.asDict() for m in g]
+            if isinstance(g, float):
+                # the segmented audio sums run over the concatenated
+                # batch, so their last bits depend on batch composition
+                want = pytest.approx(want, rel=1e-12, abs=1e-15)
+            assert g == want, (row["clip_id"], c, g, e[c])
 
 
 def test_multimodal_fused_plan_single_python_stage(spark):
-    """The multimodal pipeline's plan must contain exactly ONE Python
+    """Every pipeline config's plan must contain exactly ONE Python
     boundary (the fused MapInPandas) and no Exchange."""
+    from pyspark.sql import functions as F
+
+    from top_secret_spark.operators.audio import AudioGateThresholds
+
     # localCheckpoint cuts the generator's own MapInPandas out of the
     # measured plan — only the pipeline's boundary should remain
     clips = clips_df(spark, 10, with_audio=True).localCheckpoint(eager=True)
-    plan = (
-        run_pipeline(clips, PipelineConfig(include_audio=True))
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange" not in plan
-    n_python = plan.count("MapInPandas") + plan.count("ArrowEvalPython")
-    assert n_python == 1, plan
+    clips = clips.withColumn("entities", F.array(F.struct(
+        F.lit("Ralph").alias("text"), F.lit("PERSON").alias("tag"),
+        F.lit(0.9).alias("score"))))
+    gate = AudioGateThresholds()
+    for cfg in (
+        PipelineConfig(),
+        PipelineConfig(include_audio=True),
+        PipelineConfig(include_audio=True, audio_gate=gate),
+        PipelineConfig(entities_col="entities"),
+        PipelineConfig(include_audio=True, entities_col="entities"),
+        PipelineConfig(scrub_dropped=True),
+    ):
+        out = run_pipeline(clips, cfg)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, cfg
+        assert plan.count("MapInPandas") == 1, (cfg, plan)
+        assert "ArrowEvalPython" not in plan, (cfg, plan)
+        assert out.count() == 10
 
 
 def test_lang_consistency_col(spark):

@@ -328,6 +328,7 @@ def test_select_until_budget_partition_invariant(spark):
     assert a == b and len(a) > 0
 
 
+@pytest.mark.filterwarnings("error::FutureWarning")
 def test_repeat_epochs_counts_and_determinism(spark):
     from top_secret_spark.operators.sampling import (
         repeat_epochs,
@@ -360,6 +361,7 @@ def test_repeat_epochs_counts_and_determinism(spark):
     assert again == per_doc
 
 
+@pytest.mark.filterwarnings("error::FutureWarning")
 def test_repeat_epochs_scalar_default_and_validation(spark):
     import pytest as _pytest
 

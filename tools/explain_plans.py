@@ -56,12 +56,12 @@ def main():
     sections.append((
         "Fused quality-filter + scrub pipeline (parquet → output projection)",
         pipeline_plan,
-        "- ONE `ArrowEvalPython` node — the whole Python pipeline crosses the\n"
-        "  JVM boundary once per batch; everything around it is\n"
-        "  `WholeStageCodegen`.\n"
+        "- ONE `MapInPandas` node — the whole Python pipeline crosses the\n"
+        "  JVM boundary once per batch, for every `PipelineConfig`;\n"
+        "  everything around it is `WholeStageCodegen`.\n"
         "- `Scan parquet` shows a pruned `ReadSchema` (only doc_id + text are\n"
-        "  read — column pruning reaches the scan even though the UDF consumes\n"
-        "  one column and the projection keeps three).\n"
+        "  read — the projection below the stage keeps two columns, and the\n"
+        "  stage carries every input column it is given).\n"
         "- Zero `Exchange` nodes: map-only, embarrassingly parallel; scales\n"
         "  with input splits, no shuffle to skew.",
     ))

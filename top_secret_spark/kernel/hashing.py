@@ -225,13 +225,3 @@ def embed_texts(
     norms = np.linalg.norm(acc, axis=1, keepdims=True)
     np.divide(acc, norms, out=acc, where=norms > 0)
     return acc.astype(np.float32)
-
-
-def hash_text_ngrams(text: str, orders=(1, 2, 3), buckets: int = 1 << 16) -> np.ndarray:
-    """Bucket-count vector for one text (used to build model profiles)."""
-    data, lengths = encode_batch([text])
-    counts = np.zeros(buckets, dtype=np.float64)
-    for n in orders:
-        _, h = ngram_hashes(data, lengths, n, buckets)
-        np.add.at(counts, h, 1.0)
-    return counts

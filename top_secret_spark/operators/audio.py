@@ -49,7 +49,7 @@ def with_audio_features(df: DataFrame) -> DataFrame:
 
 def append_audio_feature_columns(pdf):
     """Decode-boundary core shared by ``with_audio_features`` and the
-    single-crossing multimodal fused stage (operators/fused.py): one
+    pipeline's single stage (operators/fused.py, include_audio): one
     concatenated decode + segmented feature pass per codec present in
     the Arrow batch — no per-clip Python loop — then ``bytes`` is
     dropped and the six feature columns are appended in place."""

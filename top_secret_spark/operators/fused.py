@@ -1,34 +1,30 @@
-"""Fused single-pass pipeline stage: ONE Arrow crossing per batch.
+"""The pipeline's one Spark stage: ONE Arrow crossing per batch.
 
-The modular pipeline (quality.py + features.py + scrub.py) crosses the
-JVM↔Python boundary twice and computes signals JVM-side.  That layout is
-the right default when the heavy work is Catalyst-expressible — but this
-pipeline's gating stages (langid, perplexity, scrub) are irreducibly
-Python/numpy, so every extra stage just adds an Arrow round-trip of the
-full transcript column.  The fused stage computes everything in one
-crossing, using the SAME kernel functions the oracles test, and scrubs
-only rows that pass keep/drop:
+Every ``run_pipeline`` config runs as a single ``mapInPandas`` that, per
+Arrow batch, optionally decodes the audio (``bytes`` → feature columns),
+then computes every text signal, langid, perplexity, keep/drop and the
+scrub of kept rows with the SAME kernel functions the oracles test:
 
-    transcript → (signals, lang, lang_conf, ppl, keep, drop_reason,
-                  scrubbed, mapping)
+    clips → clips + [audio features] + (signals, lang, lang_conf, ppl,
+                                        keep, drop_reason, scrubbed,
+                                        mapping)
 
-Semantics are identical to the modular path by construction (both call
-the kernel; the kernel is pinned by the golden corpus + DuckDB oracles).
-At cluster scale the fused stage halves Python-boundary traffic and
-leaves the plan scan → one ArrowEvalPython → project, still fully
-pushdown/pruning-friendly on the input side.
+The gating stages (langid, perplexity, scrub) are irreducibly
+Python/numpy, so the whole body runs in one worker round-trip and the
+plan stays scan → one MapInPandas → project, with no shuffle.  The
+modular operators (quality.py, features.py, scrub.py) remain as
+composable pieces for the oracle queries; the pipeline does not use them.
 """
 
 from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from ..kernel.filters import DEFAULT_CONFIG, ScrubConfig
 from ..kernel.quality import DEFAULT_THRESHOLDS, QualityThresholds
+from .audio import _FEATURES_SCHEMA_SUFFIX, append_audio_feature_columns
 from .scrub import MAPPING_TYPE
 
 FUSED_TYPE = T.StructType(
@@ -53,57 +49,16 @@ FUSED_TYPE = T.StructType(
 FUSED_FIELDS = [f.name for f in FUSED_TYPE.fields]
 
 
-def make_fused_udf(
-    scrub_config: ScrubConfig = DEFAULT_CONFIG,
-    thresholds: QualityThresholds = DEFAULT_THRESHOLDS,
-    scrub_dropped: bool = False,
-    counters=None,
-    with_entities: bool = False,
-):
-    scrub_config.all_filters()  # plan-time label validation (op 9)
-
-    def _run(texts: pd.Series, ents: list | None) -> pd.DataFrame:
-        return fused_text_frame(
-            texts, ents, scrub_config, thresholds, scrub_dropped, counters
-        )
-
-    if with_entities:
-
-        @pandas_udf(FUSED_TYPE)
-        def fused_with_entities(
-            texts: pd.Series, entities: pd.Series
-        ) -> pd.DataFrame:
-            ents = [
-                None
-                if e is None
-                else [
-                    {"text": x["text"], "tag": x["tag"], "score": x["score"]}
-                    for x in e
-                ]
-                for e in entities.tolist()
-            ]
-            return _run(texts, ents)
-
-        return fused_with_entities
-
-    @pandas_udf(FUSED_TYPE)
-    def fused(texts: pd.Series) -> pd.DataFrame:
-        return _run(texts, None)
-
-    return fused
-
-
 def fused_text_frame(
     texts: pd.Series,
     ents: list | None,
     scrub_config: ScrubConfig = DEFAULT_CONFIG,
     thresholds: QualityThresholds = DEFAULT_THRESHOLDS,
     scrub_dropped: bool = False,
-    counters=None,
 ) -> pd.DataFrame:
     """One Arrow batch of the fused text pipeline (signals → langid →
-    perplexity → keep/drop → scrub-kept-only), shared by the
-    ``pandas_udf`` wrapper and the single-crossing multimodal stage.
+    perplexity → keep/drop → scrub-kept-only), the text half of
+    ``fused_stage``.  ``ents`` is None or one entity list per text.
     Returns a DataFrame with exactly ``FUSED_FIELDS`` columns."""
     import re
 
@@ -184,79 +139,57 @@ def fused_text_frame(
         rows["mapping"][i] = [
             {"key": k, "value": v} for k, v in mappings[j]
         ]
-    if counters is not None:
-        counters.rows_in.add(n)
-        counters.rows_kept.add(int(keep_v.sum()))
-        counters.rows_scrubbed.add(len(to_scrub))
     return pd.DataFrame(rows)[FUSED_FIELDS]
 
 
-def run_pipeline_fused(
+
+
+def fused_stage(
     clips: DataFrame,
     scrub_config: ScrubConfig = DEFAULT_CONFIG,
     thresholds: QualityThresholds = DEFAULT_THRESHOLDS,
     scrub_dropped: bool = False,
-    text_col: str = "transcript",
-    counters=None,
+    include_audio: bool = False,
     entities_col: str | None = None,
 ) -> DataFrame:
-    udf = make_fused_udf(
-        scrub_config, thresholds, scrub_dropped, counters,
-        with_entities=entities_col is not None,
-    )
-    args = (F.col(text_col),) if entities_col is None else (
-        F.col(text_col), F.col(entities_col))
-    df = clips.withColumn("_f", udf(*args))
-    return df.withColumns(
-        {name: F.col(f"_f.{name}") for name in FUSED_FIELDS}
-    ).drop("_f")
-
-
-def run_pipeline_fused_multimodal(
-    clips: DataFrame,
-    scrub_config: ScrubConfig = DEFAULT_CONFIG,
-    thresholds: QualityThresholds = DEFAULT_THRESHOLDS,
-    scrub_dropped: bool = False,
-    text_col: str = "transcript",
-    counters=None,
-) -> DataFrame:
-    """The audio+text pipeline in ONE Arrow crossing: decode → segmented
-    audio features → fused text kernel, all inside a single mapInPandas,
-    so the transcript column crosses the JVM↔Python boundary once
-    instead of riding a decode crossing AND a text crossing (the
-    two-stage layout pays a second worker round-trip plus an Arrow
-    ser/deser of every non-audio column per batch).  Calls EXACTLY the
-    same batch cores as the two-crossing path
-    (``append_audio_feature_columns``, ``fused_text_frame``), so
-    semantics are identical by construction — equivalence pytest-gated.
-
-    The plan stays scan → one MapInPandas → project: pushdown/pruning
-    still reach the scan, and nothing downstream changes (the audio
-    gate and keep/drop fold are Catalyst expressions over the emitted
-    columns).  ``bytes`` is consumed and not emitted, as in
-    ``with_audio_features``."""
+    """clips → clips + [audio features] + ``FUSED_FIELDS`` in one
+    ``mapInPandas``.  Every input column is carried through, except
+    ``bytes`` when ``include_audio`` (it is consumed, as in
+    ``with_audio_features``); an input column named like an output
+    field is replaced in place.  ``entities_col`` names an
+    array<struct<text,tag,score>> column of injected NER entities."""
     scrub_config.all_filters()  # plan-time label validation (op 9)
-    from .audio import _FEATURES_SCHEMA_SUFFIX, append_audio_feature_columns
 
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in clips.schema
-        if f.name != "bytes"
-    )
-    schema += ", " + _FEATURES_SCHEMA_SUFFIX + ", " + ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in FUSED_TYPE.fields
-    )
+    # name → DDL type, in output order; dict.update replaces a name in
+    # place and appends a new one, as pandas column assignment does
+    cols = {f.name: f.dataType.simpleString() for f in clips.schema}
+    if include_audio:
+        del cols["bytes"]
+        cols.update(
+            f.split(" ", 1) for f in _FEATURES_SCHEMA_SUFFIX.split(", ")
+        )
+    cols.update((f.name, f.dataType.simpleString()) for f in FUSED_TYPE.fields)
+    schema = ", ".join(f"`{name}` {ddl}" for name, ddl in cols.items())
 
-    def run(iterator):
-        for pdf in iterator:
-            out = append_audio_feature_columns(pdf)
+    def run(batches):
+        for pdf in batches:
+            if include_audio:
+                pdf = append_audio_feature_columns(pdf)
+            ents = None if entities_col is None else [
+                None if e is None else [
+                    {"text": x["text"], "tag": x["tag"], "score": x["score"]}
+                    for x in e
+                ]
+                for e in pdf[entities_col].tolist()
+            ]
             text = fused_text_frame(
-                out[text_col], None, scrub_config, thresholds,
-                scrub_dropped, counters,
+                pdf["transcript"], ents, scrub_config, thresholds,
+                scrub_dropped,
             )
             for name in FUSED_FIELDS:
                 # .values sidesteps index alignment: both frames are
                 # positionally parallel over the same Arrow batch
-                out[name] = text[name].values
-            yield out
+                pdf[name] = text[name].values
+            yield pdf
 
     return clips.mapInPandas(run, schema=schema)

@@ -458,7 +458,7 @@ def repeat_epochs(
               for x in (F.lit(k), F.lit(float(v)))]
         )
         ep = F.coalesce(
-            m.getItem(F.col(strata_col)), F.lit(float(default_epochs))
+            m[F.col(strata_col)], F.lit(float(default_epochs))
         )
     else:
         if float(epochs) < 0:

@@ -219,15 +219,6 @@ def ngrams_from_words(words: Column, n: int = 1) -> Column:
     )
 
 
-def ngram_terms_col(text, n: int = 1) -> Column:
-    """Array of word-level n-grams straight from a text column — the
-    composable one-expression form.  For n > 1 prefer projecting
-    ``words_col`` first and calling ``ngrams_from_words`` on the
-    attribute (see that docstring); this form inlines the tokenizer
-    into the lambda and re-splits per element."""
-    return ngrams_from_words(words_col(text), n)
-
-
 def top_terms(
     df: DataFrame, text_col: str = "text", k: int = 100, n: int = 1
 ) -> DataFrame:

@@ -1,11 +1,12 @@
 """The end-to-end quality-filter + PII-scrub pipeline.
 
 clips(clip_id, bytes, sr_hz, dur_ms, codec, transcript)
-  → [optional] audio decode-validate + features   (mapInPandas, numpy)
-  → Catalyst quality signals                      (codegen, no Python)
-  → langid + perplexity + repetition              (one pandas UDF stage)
-  → keep/drop decision                            (Catalyst when-chain)
-  → PII scrub of kept transcripts                 (one pandas UDF stage)
+  → one mapInPandas stage (operators/fused.py), per Arrow batch:
+      [optional] audio decode-validate + features   (numpy)
+      quality signals + langid + perplexity        (numpy)
+      keep/drop decision                            (vectorized)
+      PII scrub of kept transcripts                 (regex kernel)
+  → [optional] audio gate folded into keep/drop    (Catalyst)
 
 The whole pipeline is map-only: zero shuffles, zero driver collects —
 embarrassingly parallel, which is what makes the N→4N scaling-efficiency
@@ -24,14 +25,8 @@ from pyspark.sql import functions as F
 
 from .kernel.filters import NORTH_STAR_CONFIG, ScrubConfig
 from .kernel.quality import DEFAULT_THRESHOLDS, QualityThresholds
-from .operators.audio import (
-    AudioGateThresholds,
-    audio_drop_reason_col,
-    with_audio_features,
-)
-from .operators.features import with_text_features
-from .operators.quality import with_keep_drop, with_quality_signals
-from .operators.scrub import make_scrub_udf
+from .operators.audio import AudioGateThresholds, audio_drop_reason_col
+from .operators.fused import fused_stage
 
 
 @dataclass(frozen=True)
@@ -50,18 +45,20 @@ class PipelineConfig:
     # the engine's injected-entities slot (spec/spec_helper.rb:26-31);
     # None runs regex/dictionary filters only (NullModel semantics)
     entities_col: str | None = None
-    # audio-quality gate thresholds (operators/audio.py) — when set (and
-    # include_audio), the final keep/drop is MULTIMODAL: keep requires
-    # passing both gates, drop_reason names the audio reason first (a
+    # audio-quality gate thresholds (operators/audio.py) — when set
+    # (requires include_audio), the final keep/drop is MULTIMODAL: keep
+    # requires passing both gates, drop_reason names the audio reason first (a
     # clip whose audio is unusable can't be trained on however clean its
     # transcript reads).  None keeps the text-only reference semantics.
     audio_gate: AudioGateThresholds | None = None
     n_buckets: int = 64  # hash buckets for the checkpointed layout
-    # fused=True runs signals+features+keep/drop+scrub in ONE Arrow
-    # crossing (operators/fused.py) — identical semantics, half the
-    # Python-boundary traffic.  fused=False uses the modular operators
-    # (Catalyst signals, two UDF stages).
-    fused: bool = True
+
+    def __post_init__(self):
+        if self.audio_gate is not None and not self.include_audio:
+            raise ValueError(
+                "audio_gate needs include_audio=True: the gate reads the "
+                "audio features that only the decode stage computes"
+            )
 
 
 DEFAULT_PIPELINE = PipelineConfig()
@@ -127,92 +124,30 @@ def run_pipeline(
     clips: DataFrame, config: PipelineConfig = DEFAULT_PIPELINE
 ) -> DataFrame:
     """clips → clips + (quality signals, lang, lang_conf, ppl, keep,
-    drop_reason, scrubbed, mapping)."""
-    df = clips
-    audio_gated = config.include_audio and config.audio_gate is not None
-    if config.include_audio and config.fused and config.entities_col is None:
-        # single-crossing multimodal stage: decode + audio features +
-        # the full text kernel in ONE mapInPandas — the transcript (and
-        # every carried column) pays one Arrow round-trip, not two.
-        # Semantics identical to the two-stage path below (same batch
-        # cores; equivalence pytest-gated).  The entities-injected
-        # variant keeps the two-stage layout: struct columns arrive
-        # differently under mapInPandas and that path is rare.
-        from .operators.fused import run_pipeline_fused_multimodal
+    drop_reason, scrubbed, mapping), plus the audio features when
+    ``include_audio``.
 
-        out = run_pipeline_fused_multimodal(
-            df, config.scrub, config.thresholds, config.scrub_dropped
-        )
-        if audio_gated:
-            reason = audio_drop_reason_col(config.audio_gate)
-            out = out.withColumn("audio_drop_reason", reason).withColumn(
-                "audio_keep", reason.isNull()
-            )
-            return _fold_audio_gate(out)
-        return out
-    if config.include_audio:
-        df = with_audio_features(df)
-        if audio_gated:
-            reason = audio_drop_reason_col(config.audio_gate)
-            df = df.withColumn("audio_drop_reason", reason).withColumn(
-                "audio_keep", reason.isNull()
-            )
-
-    if config.fused:
-        from .operators.fused import run_pipeline_fused
-
-        out = run_pipeline_fused(
-            df, config.scrub, config.thresholds, config.scrub_dropped,
-            entities_col=config.entities_col,
-        )
-        return _fold_audio_gate(out) if audio_gated else out
-
-    df = with_quality_signals(df, "transcript")
-    df = with_text_features(df, "transcript")
-    df = with_keep_drop(df, config.thresholds)
-
-    # Scrub only kept rows unless configured otherwise: dropped rows never
-    # reach training data, so scrubbing them is wasted Python time.  The
-    # trick keeps one UDF and no union: dropped rows enter the UDF as
-    # null and pass straight through.
-    scrub_input = (
-        F.col("transcript")
-        if config.scrub_dropped
-        else F.when(F.col("keep"), F.col("transcript"))
+    With ``audio_gate`` the text decision is folded with the gate: keep
+    requires both, and the audio reason wins the drop_reason slot.
+    Scrub output for rows dropped ONLY by audio is left as the text
+    pass produced it (they were text-kept) — harmless, since
+    downstream filters on ``keep``, and it keeps the text kernel
+    modality-blind."""
+    out = fused_stage(
+        clips, config.scrub, config.thresholds, config.scrub_dropped,
+        include_audio=config.include_audio, entities_col=config.entities_col,
     )
-    if config.entities_col is not None:
-        from .operators.scrub import make_scrub_with_entities_udf
-
-        scrub_udf = make_scrub_with_entities_udf(config.scrub)
-        df = df.withColumn(
-            "_scrub", scrub_udf(scrub_input, F.col(config.entities_col))
-        )
-    else:
-        scrub_udf = make_scrub_udf(config.scrub)
-        df = df.withColumn("_scrub", scrub_udf(scrub_input))
-    df = df.withColumns(
+    if config.audio_gate is None:
+        return out
+    reason = audio_drop_reason_col(config.audio_gate)
+    return out.withColumns(
         {
-            "scrubbed": F.when(
-                F.col("keep") | F.lit(config.scrub_dropped), F.col("_scrub.scrubbed")
-            ),
-            "mapping": F.when(
-                F.col("keep") | F.lit(config.scrub_dropped), F.col("_scrub.mapping")
-            ),
+            "audio_drop_reason": reason,
+            "audio_keep": reason.isNull(),
+            "drop_reason": F.coalesce(reason, F.col("drop_reason")),
+            "keep": F.col("keep") & reason.isNull(),
         }
-    ).drop("_scrub")
-    return _fold_audio_gate(df) if audio_gated else df
-
-
-def _fold_audio_gate(out: DataFrame) -> DataFrame:
-    """Combine the text decision with the audio gate: keep requires both;
-    the audio reason wins the drop_reason slot.  Scrub output for rows
-    dropped ONLY by audio is left as produced by the text pass (they were
-    text-kept) — harmless, since downstream filters on ``keep``, and it
-    keeps the text stages modality-blind."""
-    return out.withColumn(
-        "drop_reason",
-        F.coalesce(F.col("audio_drop_reason"), F.col("drop_reason")),
-    ).withColumn("keep", F.col("keep") & F.col("audio_keep"))
+    )
 
 
 def partition_audit(df: DataFrame) -> DataFrame:
@@ -226,42 +161,3 @@ def partition_audit(df: DataFrame) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("n"))
     )
-
-
-class PipelineCounters:
-    """Accumulator-backed stage counters (north-rule 'counters').
-
-    Updated inside the fused UDF via closure capture; read on the driver
-    after an action.  Accumulators are at-least-once under task retries —
-    they are MONITORING, not accounting; exact per-bucket counts live in
-    the checkpoint lineage (sources/checkpoint.py)."""
-
-    def __init__(self, spark):
-        sc = spark.sparkContext
-        self.rows_in = sc.accumulator(0)
-        self.rows_kept = sc.accumulator(0)
-        self.rows_scrubbed = sc.accumulator(0)
-
-    def as_dict(self) -> dict:
-        return {
-            "rows_in": self.rows_in.value,
-            "rows_kept": self.rows_kept.value,
-            "rows_scrubbed": self.rows_scrubbed.value,
-        }
-
-
-OUTPUT_COLUMNS = [
-    "clip_id",
-    "keep",
-    "drop_reason",
-    "lang",
-    "lang_conf",
-    "ppl",
-    "scrubbed",
-    "mapping",
-]
-
-
-def pipeline_output(clips: DataFrame, config: PipelineConfig = DEFAULT_PIPELINE) -> DataFrame:
-    """The compact output projection (SURVEY.md §1 north-rule schema)."""
-    return run_pipeline(clips, config).select("clip_id", *OUTPUT_COLUMNS[1:])

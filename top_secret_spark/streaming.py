@@ -15,25 +15,29 @@ from pyspark.sql import functions as F
 
 from .kernel.filters import DEFAULT_CONFIG, ScrubConfig
 from .kernel.quality import DEFAULT_THRESHOLDS, QualityThresholds
-from .operators.fused import run_pipeline_fused
+from .pipeline import PipelineConfig, run_pipeline
 
 
 def scrub_stream(
     stream: DataFrame,
     scrub_config: ScrubConfig = DEFAULT_CONFIG,
     thresholds: QualityThresholds = DEFAULT_THRESHOLDS,
-    text_col: str = "transcript",
     entities_col: str | None = None,
 ) -> DataFrame:
-    """Apply the full quality-filter + scrub stage to a streaming frame.
+    """Apply the full quality-filter + scrub stage (``run_pipeline``,
+    text only) to a streaming frame.  ``scrub_config`` defaults to the
+    reference's six filters, not the pipeline's URL-scrubbing default.
 
     Stateless map — no watermark needed; works with any source/sink and
     exactly-once file/Delta sinks via checkpointLocation."""
     if not stream.isStreaming:
         raise ValueError("scrub_stream expects a streaming DataFrame")
-    return run_pipeline_fused(
-        stream, scrub_config, thresholds, text_col=text_col,
-        entities_col=entities_col,
+    return run_pipeline(
+        stream,
+        PipelineConfig(
+            scrub=scrub_config, thresholds=thresholds,
+            entities_col=entities_col,
+        ),
     )
 
 
@@ -262,11 +266,10 @@ def multimodal_stream(stream: DataFrame, config=None) -> DataFrame:
     segmented audio features → fused text kernel → audio gate →
     multimodal keep/drop fold, applied to a streaming clips frame.
     Every stage is a stateless per-row map (one mapInPandas plus
-    codegen'd projections — operators/fused.py
-    run_pipeline_fused_multimodal), so the lift needs no watermark and
-    works with any source and exactly-once file/Delta sinks — the
-    ingest-time shape of the batch pipeline: gate clips AS THEY LAND,
-    before anything is persisted downstream.
+    codegen'd projections — operators/fused.py fused_stage), so the
+    lift needs no watermark and works with any source and exactly-once
+    file/Delta sinks — the ingest-time shape of the batch pipeline:
+    gate clips AS THEY LAND, before anything is persisted downstream.
 
     ``config`` defaults to ``PipelineConfig(include_audio=True,
     audio_gate=AudioGateThresholds())`` — the multimodal gate; pass any
@@ -275,7 +278,6 @@ def multimodal_stream(stream: DataFrame, config=None) -> DataFrame:
     if not stream.isStreaming:
         raise ValueError("multimodal_stream expects a streaming DataFrame")
     from .operators.audio import AudioGateThresholds
-    from .pipeline import PipelineConfig, run_pipeline
 
     if config is None:
         config = PipelineConfig(

@@ -15,9 +15,8 @@ def ship_package(spark) -> str:
     package, regardless of the driver's cwd/sys.path.  Idempotent per
     SparkContext.  Returns the zip path.
 
-    On a real cluster prefer ``spark-submit --py-files top_secret_spark.zip``
-    (bench.py does exactly that); this helper covers notebook / scripted
-    local use.
+    On a real cluster prefer ``spark-submit --py-files top_secret_spark.zip``;
+    this helper covers notebook / scripted local use.
     """
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     root = os.path.dirname(pkg_dir)
@@ -32,16 +31,3 @@ def ship_package(spark) -> str:
         spark.sparkContext.addPyFile(zpath)
         spark.sparkContext._tss_shipped = True
     return zpath
-
-
-def make_zip(out_path: str) -> str:
-    """Build the --py-files zip for spark-submit."""
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    root = os.path.dirname(pkg_dir)
-    with zipfile.ZipFile(out_path, "w", zipfile.ZIP_DEFLATED) as zf:
-        for dirpath, _dirnames, filenames in os.walk(pkg_dir):
-            for fn in filenames:
-                if fn.endswith(".py"):
-                    full = os.path.join(dirpath, fn)
-                    zf.write(full, os.path.relpath(full, root))
-    return out_path
