@@ -398,9 +398,11 @@ def test_multimodal_fused_single_crossing_equivalence(spark):
             assert g == want, (row["clip_id"], c, g, e[c])
 
 
-def test_multimodal_fused_plan_single_python_stage(spark):
+def test_multimodal_fused_plan_single_python_stage(spark, tmp_path):
     """Every pipeline config's plan must contain exactly ONE Python
-    boundary (the fused MapInPandas) and no Exchange."""
+    boundary (the fused ArrowEvalPython) and no Exchange, and only the
+    columns the stage reads may cross it: a text config that selects a
+    few outputs must not scan the audio payload."""
     from pyspark.sql import functions as F
 
     from top_secret_spark.operators.audio import AudioGateThresholds
@@ -423,9 +425,18 @@ def test_multimodal_fused_plan_single_python_stage(spark):
         out = run_pipeline(clips, cfg)
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, cfg
-        assert plan.count("MapInPandas") == 1, (cfg, plan)
-        assert "ArrowEvalPython" not in plan, (cfg, plan)
+        assert plan.count("ArrowEvalPython") == 1, (cfg, plan)
+        assert "MapInPandas" not in plan, (cfg, plan)
         assert out.count() == 10
+
+    path = str(tmp_path / "clips")
+    clips.drop("entities").write.parquet(path)
+    out = run_pipeline(spark.read.parquet(path)).select("clip_id", "keep")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    scan = next(ln for ln in plan.splitlines() if "ReadSchema" in ln)
+    read_schema = scan[scan.index("ReadSchema"):]
+    assert "transcript" in read_schema and "bytes" not in read_schema, plan
+    assert out.count() == 10
 
 
 def test_lang_consistency_col(spark):

@@ -56,12 +56,12 @@ def main():
     sections.append((
         "Fused quality-filter + scrub pipeline (parquet → output projection)",
         pipeline_plan,
-        "- ONE `MapInPandas` node — the whole Python pipeline crosses the\n"
-        "  JVM boundary once per batch, for every `PipelineConfig`;\n"
+        "- ONE `ArrowEvalPython` node — the whole Python pipeline crosses\n"
+        "  the JVM boundary once per batch, for every `PipelineConfig`;\n"
         "  everything around it is `WholeStageCodegen`.\n"
         "- `Scan parquet` shows a pruned `ReadSchema` (only doc_id + text are\n"
-        "  read — the projection below the stage keeps two columns, and the\n"
-        "  stage carries every input column it is given).\n"
+        "  read); only the columns the stage reads cross to Python, the rest\n"
+        "  stay in the JVM.\n"
         "- Zero `Exchange` nodes: map-only, embarrassingly parallel; scales\n"
         "  with input splits, no shuffle to skew.",
     ))

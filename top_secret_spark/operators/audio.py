@@ -14,14 +14,23 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..kernel.audio import BYTES_PER_SAMPLE as _BYTES_PER_SAMPLE
 from ..kernel.audio import SUPPORTED_CODECS as _SUPPORTED_CODECS
 
-_FEATURES_SCHEMA_SUFFIX = (
-    "decode_ok boolean, rms double, zcr double, dur_ms_measured int, "
-    "silence_ratio double, clipping_ratio double"
+AUDIO_FEATURES_TYPE = T.StructType(
+    [
+        T.StructField("decode_ok", T.BooleanType()),
+        T.StructField("rms", T.DoubleType()),
+        T.StructField("zcr", T.DoubleType()),
+        T.StructField("dur_ms_measured", T.IntegerType()),
+        T.StructField("silence_ratio", T.DoubleType()),
+        T.StructField("clipping_ratio", T.DoubleType()),
+    ]
 )
+
+AUDIO_FEATURE_FIELDS = [f.name for f in AUDIO_FEATURES_TYPE.fields]
 
 
 def with_audio_features(df: DataFrame) -> DataFrame:
@@ -34,11 +43,11 @@ def with_audio_features(df: DataFrame) -> DataFrame:
     multi-KB audio blobs back across the Arrow boundary (and through
     every downstream stage) would double the pipeline's memory traffic
     for a column nothing downstream reads."""
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema
-        if f.name != "bytes"
+    schema = T.StructType(
+        [T.StructField(f.name, f.dataType) for f in df.schema
+         if f.name != "bytes"]
+        + AUDIO_FEATURES_TYPE.fields
     )
-    schema += ", " + _FEATURES_SCHEMA_SUFFIX
 
     def run(iterator):
         for pdf in iterator:

@@ -1,9 +1,10 @@
 """The pipeline's one Spark stage: ONE Arrow crossing per batch.
 
-Every ``run_pipeline`` config runs as a single ``mapInPandas`` that, per
-Arrow batch, optionally decodes the audio (``bytes`` → feature columns),
-then computes every text signal, langid, perplexity, keep/drop and the
-scrub of kept rows with the SAME kernel functions the oracles test:
+Every ``run_pipeline`` config runs as a single scalar ``pandas_udf``
+that, per Arrow batch, optionally decodes the audio (``bytes`` → feature
+columns), then computes every text signal, langid, perplexity,
+keep/drop and the scrub of kept rows with the SAME kernel functions the
+oracles test:
 
     clips → clips + [audio features] + (signals, lang, lang_conf, ppl,
                                         keep, drop_reason, scrubbed,
@@ -11,20 +12,28 @@ scrub of kept rows with the SAME kernel functions the oracles test:
 
 The gating stages (langid, perplexity, scrub) are irreducibly
 Python/numpy, so the whole body runs in one worker round-trip and the
-plan stays scan → one MapInPandas → project, with no shuffle.  The
-modular operators (quality.py, features.py, scrub.py) remain as
-composable pieces for the oracle queries; the pipeline does not use them.
+plan stays scan → one ArrowEvalPython → project, with no shuffle.  Only
+the columns the body reads cross to Python; the rest stay in the JVM,
+so column pruning still reaches the scan.  The modular operators
+(quality.py, features.py, scrub.py) remain as composable pieces for the
+oracle queries; the pipeline does not use them.
 """
 
 from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.functions import pandas_udf
 
 from ..kernel.filters import DEFAULT_CONFIG, ScrubConfig
 from ..kernel.quality import DEFAULT_THRESHOLDS, QualityThresholds
-from .audio import _FEATURES_SCHEMA_SUFFIX, append_audio_feature_columns
+from .audio import (
+    AUDIO_FEATURE_FIELDS,
+    AUDIO_FEATURES_TYPE,
+    append_audio_feature_columns,
+)
 from .scrub import MAPPING_TYPE
 
 FUSED_TYPE = T.StructType(
@@ -142,8 +151,6 @@ def fused_text_frame(
     return pd.DataFrame(rows)[FUSED_FIELDS]
 
 
-
-
 def fused_stage(
     clips: DataFrame,
     scrub_config: ScrubConfig = DEFAULT_CONFIG,
@@ -152,44 +159,49 @@ def fused_stage(
     include_audio: bool = False,
     entities_col: str | None = None,
 ) -> DataFrame:
-    """clips → clips + [audio features] + ``FUSED_FIELDS`` in one
-    ``mapInPandas``.  Every input column is carried through, except
-    ``bytes`` when ``include_audio`` (it is consumed, as in
-    ``with_audio_features``); an input column named like an output
-    field is replaced in place.  ``entities_col`` names an
+    """clips → clips + [audio features] + ``FUSED_FIELDS`` in one scalar
+    ``pandas_udf``.  Only the columns the body reads cross to Python
+    (transcript, ``entities_col`` when set, bytes/codec/sr_hz when
+    ``include_audio``); every other column stays in the JVM and can
+    still be pruned at the scan.  The UDF returns one struct that is
+    expanded in place — an input column named like an output field is
+    replaced — and ``bytes`` is dropped when ``include_audio`` (it is
+    consumed, as in ``with_audio_features``).  ``entities_col`` names an
     array<struct<text,tag,score>> column of injected NER entities."""
     scrub_config.all_filters()  # plan-time label validation (op 9)
 
-    # name → DDL type, in output order; dict.update replaces a name in
-    # place and appends a new one, as pandas column assignment does
-    cols = {f.name: f.dataType.simpleString() for f in clips.schema}
+    fields = [*AUDIO_FEATURES_TYPE.fields] if include_audio else []
+    fields += FUSED_TYPE.fields
+    names = [f.name for f in fields]
+    args = ["transcript"]
+    if entities_col is not None:
+        args.append(entities_col)
     if include_audio:
-        del cols["bytes"]
-        cols.update(
-            f.split(" ", 1) for f in _FEATURES_SCHEMA_SUFFIX.split(", ")
-        )
-    cols.update((f.name, f.dataType.simpleString()) for f in FUSED_TYPE.fields)
-    schema = ", ".join(f"`{name}` {ddl}" for name, ddl in cols.items())
+        args += ["bytes", "codec", "sr_hz"]
 
-    def run(batches):
-        for pdf in batches:
-            if include_audio:
-                pdf = append_audio_feature_columns(pdf)
-            ents = None if entities_col is None else [
-                None if e is None else [
-                    {"text": x["text"], "tag": x["tag"], "score": x["score"]}
-                    for x in e
-                ]
-                for e in pdf[entities_col].tolist()
+    @pandas_udf(T.StructType(fields))
+    def fused(*cols: pd.Series) -> pd.DataFrame:
+        texts = cols[0]
+        ents = None if entities_col is None else [
+            None if e is None else [
+                {"text": x["text"], "tag": x["tag"], "score": x["score"]}
+                for x in e
             ]
-            text = fused_text_frame(
-                pdf["transcript"], ents, scrub_config, thresholds,
-                scrub_dropped,
-            )
-            for name in FUSED_FIELDS:
+            for e in cols[1].tolist()
+        ]
+        out = fused_text_frame(
+            texts, ents, scrub_config, thresholds, scrub_dropped
+        )
+        if include_audio:
+            audio = append_audio_feature_columns(pd.DataFrame(
+                {"bytes": cols[-3], "codec": cols[-2], "sr_hz": cols[-1]}
+            ))
+            for name in AUDIO_FEATURE_FIELDS:
                 # .values sidesteps index alignment: both frames are
                 # positionally parallel over the same Arrow batch
-                pdf[name] = text[name].values
-            yield pdf
+                out[name] = audio[name].values
+        return out[names]
 
-    return clips.mapInPandas(run, schema=schema)
+    out = clips.withColumn("_fused", fused(*[F.col(c) for c in args]))
+    out = out.withColumns({n: F.col("_fused")[n] for n in names})
+    return out.drop("_fused", *(["bytes"] if include_audio else []))

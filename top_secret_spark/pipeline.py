@@ -1,7 +1,7 @@
 """The end-to-end quality-filter + PII-scrub pipeline.
 
 clips(clip_id, bytes, sr_hz, dur_ms, codec, transcript)
-  → one mapInPandas stage (operators/fused.py), per Arrow batch:
+  → one scalar pandas_udf stage (operators/fused.py), per Arrow batch:
       [optional] audio decode-validate + features   (numpy)
       quality signals + langid + perplexity        (numpy)
       keep/drop decision                            (vectorized)

@@ -265,7 +265,7 @@ def multimodal_stream(stream: DataFrame, config=None) -> DataFrame:
     """Streaming lift of the FULL multimodal pipeline: decode →
     segmented audio features → fused text kernel → audio gate →
     multimodal keep/drop fold, applied to a streaming clips frame.
-    Every stage is a stateless per-row map (one mapInPandas plus
+    Every stage is a stateless per-row map (one scalar pandas_udf plus
     codegen'd projections — operators/fused.py fused_stage), so the
     lift needs no watermark and works with any source and exactly-once
     file/Delta sinks — the ingest-time shape of the batch pipeline:

@@ -13,10 +13,8 @@ def ship_package(spark) -> str:
     Zips ``top_secret_spark`` and registers it via ``addPyFile`` so
     executor Python workers can unpickle UDF closures that reference the
     package, regardless of the driver's cwd/sys.path.  Idempotent per
-    SparkContext.  Returns the zip path.
-
-    On a real cluster prefer ``spark-submit --py-files top_secret_spark.zip``;
-    this helper covers notebook / scripted local use.
+    SparkContext.  Returns the zip path, which ``spark-submit
+    --py-files`` also accepts.
     """
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     root = os.path.dirname(pkg_dir)
